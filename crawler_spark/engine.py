@@ -28,14 +28,21 @@ Physical-plan discipline (the part that matters at 10^10 URLs):
   materialized by ONE fully-parallel job (ok.count()), then ALL sink
   writes run concurrently from cache — no write recomputes upstream
   lineage, and none pays for materializing it through a narrow plan;
-- the fetch/extract/verify chain is repartitioned with an EXPLICIT
-  partition count after the fetch join: its cost is per row, not per
-  byte, and AQE's byte-based coalescing would otherwise fold a
-  politeness-bounded (byte-small) round into one task.  The count is
-  sized from the EXACT dispatch count (pages_per_task pages/task,
-  capped at max_tasks_per_core) and keyed by url_hash — maximal
-  salting, so hot hosts spread uniformly and no straggler tail gates
-  wide parallelism (politeness.spread_partition);
+- the payload gate (decode, phash, PSNR) runs once per distinct
+  image, on the image side of the results join: the engine's one
+  cached ``web_images`` frame carries the verdict columns, filled
+  lazily by the first round job that reads it (building an engine
+  runs no job), and the verdict reaches ``results`` through the
+  image_id join.  No Python UDF runs in a round's results plan
+  outside that cached frame;
+- the fetch/extract chain is repartitioned with an EXPLICIT partition
+  count after the fetch join: its cost is per row, not per byte, and
+  AQE's byte-based coalescing would otherwise fold a politeness-bounded
+  (byte-small) round into one task.  The count is sized from the EXACT
+  dispatch count (pages_per_task pages/task, capped at
+  max_tasks_per_core) and keyed by url_hash — maximal salting, so hot
+  hosts spread uniformly and no straggler tail gates wide parallelism
+  (politeness.spread_partition);
 - the frontier is split into a per-host top-K HEAD (the working set
   the politeness window ranks each round — O(hosts × K), rewritten per
   round) and a TAIL (base snapshot + demotion add-deltas + dispatch
@@ -82,13 +89,11 @@ class CrawlConfig:
     round_ms: int = P.DEFAULT_ROUND_MS
     max_rounds: int = 64
     seed_limit: int | None = None  # reference mode: 1 (G7 single-seed)
-    # fetch/extract/verify task granularity: pages per task (the chain's
-    # cost is per row — each page is a fixed 24-listing decode/verify
-    # unit) and a tasks-per-core cap so tiny rounds don't fragment.
-    # Finer tasks amortize the straggler tail that gates wide
-    # parallelism: at 32 cores the last task of a 96-partition fat
-    # round ran alone for ~1/3 of the stage (measured; see
-    # politeness.spread_partition).
+    # fetch/extract task granularity: pages per task (the chain's cost
+    # is per row — each page explodes into a fixed 24 listings joined
+    # to their images) and a tasks-per-core cap so tiny rounds don't
+    # fragment.  Finer tasks amortize the straggler tail that gates
+    # wide parallelism (see politeness.spread_partition).
     pages_per_task: int = 256
     max_tasks_per_core: int = 12
     # frontier delta log: full-snapshot compaction cadence (rounds)
@@ -110,13 +115,10 @@ class CrawlConfig:
     partition_url_seen: bool = False
     seen_prune_min_keys: int = 100_000_000
     cache_web: bool = True
-    verify_rows: bool = True  # per-row decode+phash+PSNR gate (input_hint)
-    # "full" | "sample" | "off" — the 32-wide profile's dominant stage
-    # is this gate; "sample" verifies a deterministic ~1/denom of rows
-    # (NULL elsewhere) for scale deployments, "full" stays the default
-    # and is golden-pinned bit-identical (operators/fetch.verify_rows)
-    verify_policy: str = "full"
-    verify_sample_denom: int = 8
+    # payload gate (input_hint): decode+phash+PSNR of each distinct
+    # image, carried into results as psnr_db/phash_ok
+    # (operators/fetch.verify_rows); False omits both columns
+    verify_rows: bool = True
     image_seed: int = 42
     run_ts: str = "2026-01-01T00:00:00Z"  # P7: one deterministic stamp per run
     extra: dict = field(default_factory=dict)
@@ -152,12 +154,19 @@ class CrawlEngine:
         self.spark = spark
         self.store = store
         self.cfg = config or CrawlConfig()
+        if self.cfg.verify_rows:
+            # the verdict is a pure function of one image row, so it is
+            # computed image-side, once per payload, and joined into
+            # results by image_id.  Lazy: the first round job that reads
+            # the cached frame fills it (partitioned as read) — nothing
+            # runs here.
+            web_images = FE.verify_rows(web_images, self.cfg.image_seed)
         if self.cfg.cache_web:
             # reread twice per round otherwise; robots is broadcast-joined
-            # every round, web_images rescanned by every round's results
-            # join.  (At true 10^10 scale web caching is a no-op —
-            # .persist() spills/evicts — while the local bench is
-            # dominated by rescans without it.)
+            # every round, web_images (with its verdict) rescanned by
+            # every round's results join.  (At true 10^10 scale web
+            # caching is a no-op — .persist() spills/evicts — while the
+            # local bench is dominated by rescans without it.)
             web_pages = web_pages.persist()
             robots = robots.persist()
             web_images = web_images.persist()
@@ -326,7 +335,7 @@ class CrawlEngine:
         # Repartition AFTER the fetch join, with an EXPLICIT partition
         # count: the join's own shuffle would otherwise replace any
         # pre-join partitioning, and AQE's byte-based coalescing would
-        # then fold the (byte-small, row-expensive) extract+decode+verify
+        # then fold the (byte-small, row-expensive) extract+image-join
         # chain into one task — observed as flat scaling across core
         # counts.  Partitioned by url_hash (maximal salt) and sized from
         # the exact dispatch count: pages_per_task-page tasks amortize
@@ -345,20 +354,11 @@ class CrawlEngine:
         _round_unpersist.append(fetched)
         ok, retry, dead = FE.split_fetch_outcomes(fetched)
 
-        # results: extraction over successful pages, image payload joined
-        # last; written once below (no persist — single consumer), row
-        # count derived from the fetch stats (sum of listing sizes)
+        # results: extraction over successful pages, image payload and
+        # its verdict joined last; written once below (no persist —
+        # single consumer), row count derived from the fetch stats (sum
+        # of listing sizes)
         results = FE.extract_results(ok, self.web_images, round_no)
-        if cfg.verify_rows:
-            # input_hint per-row gate: decode, PSNR vs reference pixels,
-            # phash recompute — the dominant (and embarrassingly
-            # parallel) compute of a real image crawl
-            results = FE.verify_rows(
-                results,
-                cfg.image_seed,
-                policy=cfg.verify_policy,
-                sample_denom=cfg.verify_sample_denom,
-            )
 
         # expansion: successfully fetched SEED pages (page==0) discover pagination
         expansion = R.tag_robots(
@@ -563,8 +563,8 @@ class CrawlEngine:
                 None,
             ),
             # results keeps its natural partitioning: coalesce would
-            # propagate up the (uncached) extract+decode lineage and
-            # serialize the round's dominant compute into one task
+            # propagate up the (uncached) extract lineage and serialize
+            # it into one task
             ("results", results, None),
             ("dead", dead.select(*FR.FRONTIER_COLS), 1),
             # head rewrite every round: O(hosts × K), the price of never

@@ -22,7 +22,9 @@ arrays → project the 7-ish result columns, applying the reference's
 scalar extractors (ExtractNumber → price_digits, TakeChractersBefore
 '.html' → canonical link), then join the image payload table by
 image_id.  Bytes are joined LAST so image payloads never pass through
-the explode/extract shuffles (project early, join late).
+the explode/extract shuffles (project early, join late).  The payload
+gate (``verify_rows``) runs on the image side, before that join: once
+per distinct image, not once per listing that shows it.
 """
 
 from __future__ import annotations
@@ -91,6 +93,11 @@ def extract_results(ok_pages: DataFrame, web_images: DataFrame, round_no: int) -
     columns NULL for the other variant (idiomatic Spark: one table,
     partitioned by schema_name, instead of two sinks).  All scalar
     extraction is the shared ExtractNumber / TakeChractersBefore pair.
+
+    When ``web_images`` carries the payload verdict (``verify_rows``
+    applied image-side), ``psnr_db`` / ``phash_ok`` ride the image_id
+    left join into the last two columns; a listing whose image is
+    missing gets NULL/NULL, as a NULL payload does.
     """
     z = F.arrays_zip(
         F.col("listing_ids").alias("lid"),
@@ -143,54 +150,36 @@ def extract_results(ok_pages: DataFrame, web_images: DataFrame, round_no: int) -
             "rooms_digits",
             "total_price_digits",
             "link",
+            *[c for c in ("psnr_db", "phash_ok") if c in web_images.columns],
         )
     )
 
 
-def verify_rows(
-    results: DataFrame,
-    image_seed: int = 42,
-    policy: str = "full",
-    sample_denom: int = 8,
-) -> DataFrame:
-    """Per-row payload invariant gate (BASELINE.json input_hint): decode
-    every fetched image, recompute the perceptual hash against the
-    row's ``phash`` column, and measure decoded-pixel PSNR vs the
-    reference pixels (regenerated from image_id — the closed-world
-    analogue of 'reference extractions').
+def verify_rows(images: DataFrame, image_seed: int = 42) -> DataFrame:
+    """Payload invariant gate (BASELINE.json input_hint): decode each
+    image payload, recompute the perceptual hash against the row's
+    ``phash`` column, and measure decoded-pixel PSNR vs the reference
+    pixels (regenerated from image_id — the closed-world analogue of
+    'reference extractions').
 
     Appends ``psnr_db`` / ``phash_ok``; never drops rows — failed
-    invariants are data for the curation layer, not exceptions.
+    invariants are data for the curation layer, not exceptions.  A NULL
+    payload gets NULL/NULL.  Only the codec contract becomes data:
+    ``ValueError`` / ``NotImplementedError`` from decoding or comparing
+    the payload give ``phash_ok=False``.  Anything else — including a
+    payload row whose image_id, w, h or phash cannot be read — fails
+    the task, so a bug never turns into a verdict.
 
-    ``policy`` (VERDICT r4 item 2 — this stage IS the crawl's dominant
-    compute at wide parallelism, 7-123 s/round in the 32-wide profile):
-
-    - ``"full"`` (default): every row, bit-identical to the historical
-      behavior (golden-suite pinned).
-    - ``"sample"``: verify a deterministic ~1/``sample_denom`` of rows
-      — the gate condition is ``xxhash64(image_id) pmod denom == 0``,
-      so the sample is stable across runs/parallelism and stratified
-      across hosts by hash uniformity WITHOUT the per-host window
-      shuffle an exact top-N-per-host would cost (that shuffle would
-      move the image bytes, the one thing this stage never does).
-      Unsampled rows get NULL psnr_db/phash_ok.  The sampling gates
-      the UDF's *byte input* (``WHEN cond THEN bytes``), so skipped
-      rows ship a NULL through Arrow instead of their payload —
-      compute AND transfer drop by ~the sampling factor.
-    - ``"off"``: schema-stable NULL columns, no UDF at all (distinct
-      from the engine's ``verify_rows=False`` which omits the columns
-      entirely).
+    The verdict is a pure function of one image row plus
+    ``image_seed``, so the engine applies this to its cached
+    ``web_images`` frame, once per distinct payload, and lets the
+    columns reach ``results`` through the image_id join
+    (``extract_results``).  It works on any frame carrying image_id,
+    bytes, fmt, w, h and phash.
 
     Implemented as a SCALAR pandas UDF returning a (psnr, ok) struct —
-    not ``mapInPandas`` — deliberately: a mapInPandas pass ships the
-    ENTIRE result row (image bytes plus every extracted column) through
-    Arrow into Python and back, while the scalar UDF ships only its six
-    input columns in and 12 bytes/row out, roughly halving the Arrow
-    memory traffic of the round's dominant stage.  That traffic is what
-    saturates first at wide parallelism (measured 8→32 on this box:
-    the decode kernel alone scales 3.1×, the mapInPandas form 2.4×),
-    so the projection is a scaling fix, not a micro-optimization.
-    Still narrow — bytes never shuffle.
+    not ``mapInPandas`` — so only its six input columns travel through
+    Arrow into Python, and 12 bytes/row come back.  Narrow: no shuffle.
     """
     from .. import images as I
 
@@ -211,38 +200,31 @@ def verify_rows(
         ):
             if data is None:
                 continue
+            # row metadata, outside the codec guard: pandas hands a NULL
+            # int column over as NaN, and int(NaN) must fail the task
+            k = int(str(iid).rsplit("-", 1)[1])
+            w, h, ph = int(w), int(h), int(ph)
             try:
                 dec = I.decode_image(bytes(data), str(fmt))
-                k = int(str(iid).rsplit("-", 1)[1])
-                ref = I.gen_pixels(image_seed, k, int(w), int(h))
+                ref = I.gen_pixels(image_seed, k, w, h)
                 psnr[i] = I.psnr(dec, ref)
-                ok[i] = I.phash64(dec) == int(ph)
-            except Exception:
+                ok[i] = I.phash64(dec) == ph
+            except (ValueError, NotImplementedError):
                 ok[i] = False
         return pd.DataFrame(
             {"psnr_db": pd.Series(psnr, dtype="float64"),
              "phash_ok": pd.Series(ok, dtype="object")}
         )
 
-    if policy == "off":
-        return results.withColumn(
-            "psnr_db", F.lit(None).cast("double")
-        ).withColumn("phash_ok", F.lit(None).cast("boolean"))
-    if policy == "sample":
-        if sample_denom < 1:
-            raise ValueError(f"sample_denom must be >= 1, got {sample_denom}")
-        gate = F.pmod(F.xxhash64("image_id"), F.lit(sample_denom)) == 0
-        data_col = F.when(gate, F.col("bytes"))
-    elif policy == "full":
-        data_col = F.col("bytes")
-    else:
-        raise ValueError(f"unknown verify policy {policy!r}: full | sample | off")
+    # phash travels as a string: pandas turns an int column with a NULL
+    # anywhere in the Arrow batch into float64, which rounds a 64-bit
+    # hash (w and h are small enough to survive that)
     v = verify(
-        data_col, F.col("fmt"), F.col("image_id"),
-        F.col("w"), F.col("h"), F.col("phash"),
+        F.col("bytes"), F.col("fmt"), F.col("image_id"),
+        F.col("w"), F.col("h"), F.col("phash").cast("string"),
     )
     return (
-        results.withColumn("_v", v)
+        images.withColumn("_v", v)
         .withColumn("psnr_db", F.col("_v.psnr_db"))
         .withColumn("phash_ok", F.col("_v.phash_ok"))
         .drop("_v")

@@ -179,6 +179,29 @@ def test_row_invariants_gate(full_run):
     assert lossless_min == float("inf")
 
 
+def test_image_side_verdict_equals_per_row_verify(full_run):
+    """Verify-once is an optimisation, not a semantic change: every
+    results row carries exactly the verdict the per-row gate computes
+    over that row's own payload columns."""
+    from pyspark.sql import functions as F
+
+    from crawler_spark.operators import fetch as FE
+
+    store, _ = full_run
+    res = store.read("results")
+    per_row = FE.verify_rows(
+        res.withColumnRenamed("psnr_db", "_stored_psnr")
+        .withColumnRenamed("phash_ok", "_stored_ok"),
+        CrawlConfig().image_seed,
+    )
+    differ = per_row.filter(
+        ~F.col("psnr_db").eqNullSafe(F.col("_stored_psnr"))
+        | ~F.col("phash_ok").eqNullSafe(F.col("_stored_ok"))
+    ).count()
+    assert res.count() > 0
+    assert differ == 0
+
+
 def test_results_write_stays_parallel(full_run):
     """Regression guard: the results write must keep the upstream
     extract+decode pipeline parallel — a coalesce(1) here would pull

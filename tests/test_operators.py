@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from crawler_spark.operators import dedup as D
@@ -812,45 +813,108 @@ def test_anti_join_collect_arm_gated_at_scale(spark, monkeypatch):
     assert gated == expected
 
 
-def test_verify_rows_policy_knob(spark):
-    """verify_policy (VERDICT r4 item 2): "full" is the historical
-    behavior, "sample" verifies a deterministic hash-gated subset
-    (NULL elsewhere) with values identical to the full run on the
-    sampled rows, "off" appends schema-stable NULL columns."""
-    from pyspark.sql import functions as F
-
+def _verify_images_df(spark, n=40):
     from crawler_spark import images as I
-    from crawler_spark.operators import fetch as FE
 
     rows = []
-    for k in range(40):
+    for k in range(n):
         px = I.gen_pixels(42, k, 16, 12)
         rows.append((f"img-{k:012d}", bytearray(I.encode_image(px, "png")),
                      "png", 16, 12, I.phash64(px)))
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         rows, "image_id: string, bytes: binary, fmt: string, w: int, h: int, phash: long"
     )
-    full = {r["image_id"]: r for r in FE.verify_rows(df).collect()}
-    assert all(r["phash_ok"] for r in full.values())
-    off = FE.verify_rows(df, policy="off")
-    assert off.schema == FE.verify_rows(df).schema
-    assert all(
-        r["phash_ok"] is None and r["psnr_db"] is None for r in off.collect()
-    )
-    sampled = {r["image_id"]: r for r in
-               FE.verify_rows(df, policy="sample", sample_denom=4).collect()}
-    n_verified = sum(1 for r in sampled.values() if r["phash_ok"] is not None)
-    assert 0 < n_verified < 40  # a strict, deterministic subset
-    for iid, r in sampled.items():
-        if r["phash_ok"] is not None:
-            assert (r["phash_ok"], r["psnr_db"]) == (
-                full[iid]["phash_ok"], full[iid]["psnr_db"]
-            )
-    # the subset is stable across evaluations (hash gate, no rand())
-    again = {r["image_id"]: r["phash_ok"] for r in
-             FE.verify_rows(df, policy="sample", sample_denom=4).collect()}
-    assert again == {k: r["phash_ok"] for k, r in sampled.items()}
-    import pytest as _pytest
 
-    with _pytest.raises(ValueError, match="unknown verify policy"):
-        FE.verify_rows(df, policy="most")
+
+def test_verify_rows_verdicts(spark):
+    """Every valid payload passes the gate (lossless PNG: exact pixels,
+    infinite PSNR); a NULL payload gets NULL/NULL."""
+    from crawler_spark.operators import fetch as FE
+
+    df = _verify_images_df(spark)
+    full = {r["image_id"]: r for r in FE.verify_rows(df).collect()}
+    assert len(full) == 40
+    assert all(r["phash_ok"] and r["psnr_db"] == float("inf") for r in full.values())
+    # a missing-image row (NULL payload and metadata) gets NULL/NULL,
+    # and sharing an Arrow batch with it must not change the other
+    # rows' verdicts
+    missing = spark.createDataFrame(
+        [("img-000000000041", None, None, None, None, None)], df.schema
+    )
+    mixed = {
+        r["image_id"]: (r["psnr_db"], r["phash_ok"])
+        for r in FE.verify_rows(df.unionByName(missing).coalesce(1)).collect()
+    }
+    assert mixed.pop("img-000000000041") == (None, None)
+    assert mixed == {k: (r["psnr_db"], r["phash_ok"]) for k, r in full.items()}
+
+
+def test_verify_rows_corrupt_bytes_are_a_verdict(spark):
+    """Corrupt payload bytes raise inside the codec contract
+    (ValueError / NotImplementedError), which the gate records as
+    phash_ok=False with no PSNR — the row survives."""
+    from crawler_spark.operators import fetch as FE
+
+    df = spark.createDataFrame(
+        [
+            ("img-000000000001", bytearray(b"\x89PNG\r\n\x1a\n" + b"\x00" * 20), "png"),
+            ("img-000000000002", bytearray(b"\xff\xd8\xff\x00garbage"), "jpeg"),
+            ("img-000000000003", bytearray(b"not an image"), "png"),
+        ],
+        "image_id: string, bytes: binary, fmt: string",
+    ).selectExpr("*", "16 AS w", "12 AS h", "CAST(7 AS BIGINT) AS phash")
+    out = FE.verify_rows(df).collect()
+    assert len(out) == 3
+    assert all(r["phash_ok"] is False and r["psnr_db"] is None for r in out)
+
+
+def test_verify_rows_bad_metadata_fails_the_job(spark):
+    """A payload row whose dimensions are NULL is a broken image row,
+    not a codec verdict: the gate must fail the job rather than fold
+    it into phash_ok=False."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PythonException
+
+    from crawler_spark.operators import fetch as FE
+
+    good = _verify_images_df(spark, n=2)
+    bad = good.limit(1).selectExpr(
+        "'img-000000000009' AS image_id", "bytes", "fmt",
+        "CAST(NULL AS INT) AS w", "h", "phash",
+    )
+    with pytest.raises((PythonException, Py4JJavaError), match="NaN"):
+        FE.verify_rows(good.unionByName(bad)).collect()
+
+
+def test_extract_results_carries_image_side_verdict(spark):
+    """The verdict computed on the image side reaches results through
+    the image_id left join: a present image carries its verdict, a
+    missing image or a NULL payload gives NULL/NULL."""
+    from crawler_spark.operators import fetch as FE
+
+    images = _verify_images_df(spark, n=2).unionByName(
+        spark.createDataFrame(
+            [("img-000000000005", None, "png", 16, 12, 1)],
+            "image_id: string, bytes: binary, fmt: string, w: int, h: int, phash: long",
+        )
+    ).withColumn("caption", F.lit("c"))
+    pages = spark.createDataFrame(
+        [(11, "h0", "flat", 1, [0, 1, 5, 7], ["1 zł"] * 4,
+          ["https://h0/o/a.html"] * 4, ["2"] * 4, ["30"] * 4, ["9"] * 4)],
+        "url_hash: long, domain: string, schema_name: string, "
+        "schema_version: int, listing_ids: array<int>, "
+        "listing_prices: array<string>, listing_links: array<string>, "
+        "listing_rooms: array<string>, listing_areas: array<string>, "
+        "listing_totals: array<string>",
+    )
+    res = FE.extract_results(pages, FE.verify_rows(images), round_no=1)
+    assert res.columns[-2:] == ["psnr_db", "phash_ok"]
+    got = {r["image_id"]: (r["psnr_db"], r["phash_ok"]) for r in res.collect()}
+    assert got == {
+        "img-000000000000": (float("inf"), True),
+        "img-000000000001": (float("inf"), True),
+        "img-000000000005": (None, None),
+        "img-000000000007": (None, None),
+    }
+    # without the gate the columns are absent, not NULL
+    assert "psnr_db" not in FE.extract_results(pages, images, round_no=1).columns

@@ -456,17 +456,57 @@ def test_substring_dedup_no_cartesian_single_gram_key(spark, sf_dir):
     assert plan.count("HashAggregate") >= 2, plan  # partial + final count(gh)
 
 
-def test_verify_sample_policy_adds_no_exchange(spark):
-    """The sampled verify gate is a pure row-local WHEN over a hash of
-    image_id — it must not introduce any shuffle (an exact
-    top-N-per-host would have exchanged the image bytes)."""
-    from crawler_spark.operators import fetch as FE
+def _physical_nodes(plan) -> list:
+    """Physical operators of an executed plan, descending through AQE
+    wrappers and query stages but NOT into a cached relation
+    (InMemoryTableScan is a leaf: its cached plan is an inner child)."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return [plan] + _physical_nodes(plan.executedPlan())
+    if name.endswith("QueryStage"):
+        return [plan] + _physical_nodes(plan.plan())
+    kids = plan.children()
+    return [plan] + [n for i in range(kids.size()) for n in _physical_nodes(kids.apply(i))]
 
-    df = spark.createDataFrame(
-        [("img-000000000001", bytearray(b"x"), "png", 4, 4, 1)],
-        "image_id: string, bytes: binary, fmt: string, w: int, h: int, phash: long",
+
+def test_round_results_verify_only_inside_cached_images(spark, tmp_path, monkeypatch):
+    """The payload gate runs once per distinct image: a round's results
+    plan evaluates no Python UDF outside the cached image relation,
+    which itself carries the gate's ArrowEvalPython."""
+    from crawler_spark import fixtures as FX
+    from crawler_spark.engine import CrawlConfig, CrawlEngine
+    from crawler_spark.sinks import StateStore
+
+    fx = FX.write_fixtures(spark, str(tmp_path / "web"), n_seeds=4, n_hosts=3, n_images=20)
+    store = StateStore(spark, str(tmp_path / "state"))
+    captured = {}
+    write = StateStore.write_partition
+
+    def capture(self, table, round_no, df, *a, **kw):
+        if table == "results":
+            captured[round_no] = df
+        return write(self, table, round_no, df, *a, **kw)
+
+    monkeypatch.setattr(StateStore, "write_partition", capture)
+    eng = CrawlEngine(
+        spark, store,
+        web_pages=spark.read.parquet(fx["web_pages"]),
+        web_images=spark.read.parquet(fx["web_images"]),
+        robots=spark.read.parquet(fx["robots"]),
+        config=CrawlConfig(base_budget=2, max_rounds=1),
     )
-    full = _plan(FE.verify_rows(df))
-    sampled = _plan(FE.verify_rows(df, policy="sample", sample_denom=8))
-    assert sampled.count("Exchange") == full.count("Exchange")
-    assert "xxhash64" in sampled and "pmod" in sampled
+    try:
+        eng.run(spark.read.parquet(fx["seeds"]))
+        nodes = _physical_nodes(captured[1]._jdf.queryExecution().executedPlan())
+        names = [n.nodeName() for n in nodes]
+        assert not any("EvalPython" in n for n in names), names
+        # the gate lives in exactly one cached relation: the image frame
+        gated = [
+            n for n in nodes
+            if n.nodeName() == "InMemoryTableScan"
+            and "ArrowEvalPython" in n.relation().cachedPlan().toString()
+        ]
+        assert len(gated) == 1, names
+    finally:
+        for df in (eng.web_pages, eng.web_images, eng.robots):
+            df.unpersist()

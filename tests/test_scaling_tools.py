@@ -30,8 +30,10 @@ msr = _load("msr_under_test", "scripts/merge_scaling_runs.py")
 
 # ---------------------------------------------------------------- pinning
 
-def test_pin_range_always_top_slice():
-    ncpu = os.cpu_count()
+def test_pin_range_always_top_slice(monkeypatch):
+    # a fixed host size, so the slice logic is checked on any machine
+    ncpu = 64
+    monkeypatch.setattr(sb.os, "cpu_count", lambda: ncpu)
     # every leg that fits gets the TOP slice, independent of the run's
     # level list — otherwise walls from 2,8 and 2,8,32 invocations are
     # not comparable (low vCPUs take host interrupt work)
@@ -41,6 +43,8 @@ def test_pin_range_always_top_slice():
     assert sb._pin_range(8, 32) == range(ncpu - 8, ncpu)
     # a leg spanning the host necessarily takes everything
     assert sb._pin_range(ncpu, ncpu) == range(0, ncpu)
+    # a leg wider than the host is clamped to the whole host
+    assert sb._pin_range(2 * ncpu, 2 * ncpu) == range(0, ncpu)
 
 
 # ----------------------------------------------------------------- merger
