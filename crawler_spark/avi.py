@@ -115,9 +115,10 @@ def video_track(data: bytes) -> AviTrack:
                 if rate == 0:
                     raise ValueError("strh rate is zero")
                 if strf is not None and strf[1] - strf[0] >= 12:
-                    # BITMAPINFOHEADER: biWidth/biHeight at +4/+8
-                    width = _u32(data, strf[0] + 4)
-                    height = _u32(data, strf[0] + 8)
+                    # BITMAPINFOHEADER: biWidth/biHeight at +4/+8 are
+                    # signed; a negative biHeight marks a top-down DIB
+                    w, h = struct.unpack_from("<ii", data, strf[0] + 4)
+                    width, height = abs(w), abs(h)
         elif cid == b"LIST" and _list_type(data, s, e) == b"movi":
             movi = (s + 4, e)
         elif cid == b"idx1":
@@ -131,8 +132,13 @@ def video_track(data: bytes) -> AviTrack:
     want = {b"%02ddc" % stream_no, b"%02ddb" % stream_no}
     spans: list[tuple[int, int]] = []
     for cid, s, e in iter_chunks(data, *movi):
-        if cid in want:
-            spans.append((s, e - s))
+        if cid == b"LIST" and _list_type(data, s, e) == b"rec ":
+            # an interleave group (one level, per spec): its chunks are
+            # movi's own frames
+            group = iter_chunks(data, s + 4, e)
+        else:
+            group = ((cid, s, e),)
+        spans.extend((s2, e2 - s2) for c2, s2, e2 in group if c2 in want)
 
     # idx1 carries ONLY the keyframe flags, matched by occurrence order
     flags: list[bool] | None = None

@@ -126,6 +126,8 @@ def _find_path(data: bytes, start: int, end: int, *path: bytes) -> tuple[int, in
 
 
 def _stts_deltas(data: bytes, s: int, e: int, n_samples: int) -> list[int]:
+    """Decode times of the ``n_samples`` samples, plus one more entry:
+    the time at which the sample after the last one would decode."""
     n_entries = _u32(data, s + 4)
     _check_count(n_entries, s, e, 8, 8, "stts")
     dts, t, o = [], 0, s + 8
@@ -144,7 +146,8 @@ def _stts_deltas(data: bytes, s: int, e: int, n_samples: int) -> list[int]:
         while len(dts) < n_samples:
             dts.append(t)
             t += delta
-    return dts[:n_samples]
+    dts.append(t)
+    return dts
 
 
 def _sample_sizes(data: bytes, s: int, e: int) -> list[int]:
@@ -198,7 +201,8 @@ def _sync_set(data: bytes, stbl_s: int, stbl_e: int) -> set[int] | None:
     return {_u32(data, s + 8 + 4 * i) - 1 for i in range(n)}  # 1-based -> 0-based
 
 
-def _track(data: bytes, trak_s: int, trak_e: int) -> Track | None:
+def _track(data: bytes, trak_s: int, trak_e: int) -> tuple[Track, int] | None:
+    """The track and the decode time that follows its last sample."""
     tkhd = _find(data, trak_s, trak_e, b"tkhd")
     mdia = _find(data, trak_s, trak_e, b"mdia")
     if tkhd is None or mdia is None:
@@ -269,7 +273,8 @@ def _track(data: bytes, trak_s: int, trak_e: int) -> Track | None:
             )
             off += sizes[si]
             si += 1
-    return Track(track_id, handler, codec, width, height, timescale, tuple(samples))
+    track = Track(track_id, handler, codec, width, height, timescale, tuple(samples))
+    return track, dts[len(samples)]
 
 
 # ------------------------------------------------------------- fragments
@@ -339,9 +344,13 @@ def _parse_tfhd(data: bytes, s: int, e: int):
     return track_id, flags, base_off, d_dur, d_size, d_flags
 
 
-def _parse_trun(data: bytes, s: int, e: int):
+def _parse_trun(data: bytes, s: int, e: int, budget: int, default_size: int | None):
     """-> (data_offset|None, first_sample_flags|None,
-    [(duration|None, size|None, flags|None), ...])."""
+    [(duration|None, size|None, flags|None), ...]).
+
+    ``budget`` is what is left of the track's ``_MAX_SAMPLES`` after its
+    earlier samples; ``default_size`` is the tfhd/trex size that rows
+    without a size field take."""
     flags = int.from_bytes(data[s + 1 : s + 4], "big")
     o = s + 4
     count = _u32(data, o)
@@ -355,8 +364,19 @@ def _parse_trun(data: bytes, s: int, e: int):
         + 4 * bool(flags & _TRUN_FIRST_FLAGS)
         + count * per
     )
-    if count > _MAX_SAMPLES or need > e:
+    if need > e:
         raise ValueError(f"trun count {count} overruns its box")
+    if count > budget:
+        raise ValueError(f"trun count {count} exceeds the track's sample budget")
+    if count and not flags & _TRUN_SIZE:
+        # rows without a size field all take ``default_size``: their
+        # bytes must fit in the file.  Zero-size rows would tie ``count``
+        # to no byte at all (with flags=0 not even to the box's own).
+        if not default_size or count * default_size > len(data):
+            raise ValueError(
+                f"trun count {count} of {default_size or 0}-byte samples "
+                "does not fit the file"
+            )
     data_off = None
     if flags & _TRUN_DATA_OFF:
         (data_off,) = struct.unpack_from(">i", data, o)  # signed per spec
@@ -425,15 +445,18 @@ def _fragment_samples(
             else:
                 t = dts.get(track_id, 0)
             i = idx.get(track_id, 0)
+            default_size = d_size or tx_size
             samples = out.setdefault(track_id, [])
             cur = None  # data cursor; first trun without data_offset -> base
             for t3, s3, e3 in iter_boxes(data, s2, e2):
                 if t3 != b"trun":
                     continue
-                data_off, first_flags, rows = _parse_trun(data, s3, e3)
+                data_off, first_flags, rows = _parse_trun(
+                    data, s3, e3, _MAX_SAMPLES - i, default_size
+                )
                 cur = base + data_off if data_off is not None else (cur or base)
                 for ri, (dur, size, sfl) in enumerate(rows):
-                    size = size if size is not None else (d_size or tx_size)
+                    size = size if size is not None else default_size
                     dur = dur if dur is not None else (d_dur or tx_dur)
                     if size is None or dur is None:
                         raise ValueError(
@@ -478,10 +501,12 @@ def tracks(data: bytes) -> list[Track]:
             )
         raise ValueError("no moov box")
     out = []
+    next_dts: dict[int, int] = {}  # where a fragment without tfdt starts
     for typ, s, e in iter_boxes(data, *moov):
         if typ == b"trak":
-            t = _track(data, s, e)
-            if t is not None:
+            hit = _track(data, s, e)
+            if hit is not None:
+                t, next_dts[t.track_id] = hit
                 out.append(t)
     if _find(data, 0, len(data), b"moof") is not None:
         trex = _parse_trex(data, *moov)
@@ -489,7 +514,7 @@ def tracks(data: bytes) -> list[Track]:
             data,
             trex,
             {t.track_id: len(t.samples) for t in out},
-            {t.track_id: (t.samples[-1].dts if t.samples else 0) for t in out},
+            next_dts,
         )
         out = [
             t._replace(samples=t.samples + tuple(frag.get(t.track_id, ())))

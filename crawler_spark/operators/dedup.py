@@ -110,7 +110,6 @@ def anti_join_seen(
     seen: DataFrame,
     filters: DataFrame | None = None,
     n_parts: int = 64,
-    seen_count: int | None = None,
 ) -> DataFrame:
     """candidates \\ seen, by url_hash — exact, Bloom-prefiltered.
 
@@ -128,17 +127,11 @@ def anti_join_seen(
     per-partition 1 KiB floor) — aggregating over ``filters`` itself
     would EXECUTE the unpersisted applyInPandas build once for the
     gate and again in whichever arm consumes it.
-
-    ``seen_count``: pass the seen-set cardinality when the caller
-    already tracks it (the engine's round stats do) so the gate does
-    not run a full Spark count over the largest table on every call;
-    only falls back to ``seen.count()`` when it is unavailable.
     """
     if filters is None:
         return candidates.join(seen.select("url_hash"), "url_hash", "left_anti")
 
-    n_seen = seen_count if seen_count is not None else seen.count()
-    est_bytes = n_seen * _BITS_PER_KEY // 8 + n_parts * 128
+    est_bytes = seen.count() * _BITS_PER_KEY // 8 + n_parts * 128
     if est_bytes > _BROADCAST_BLOBS_MAX_BYTES:
         # adapt the one-epoch BLOOM_SCHEMA blobs to the partitioned
         # state contract and probe them where they live

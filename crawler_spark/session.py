@@ -6,6 +6,15 @@ the sandbox (local[N], 128 GiB, parquet inputs) but every knob is the
 one you would set on a real 1000-executor cluster too: AQE on (runtime
 coalescing + skew-join splitting), Arrow on (all pandas UDF transfer),
 shuffle partitions sized to cores, and broadcast threshold left to AQE.
+
+The codegen cache is sized for the crawl's round loop.  Spark keeps 100
+compiled whole-stage-codegen classes by default, but one crawl round
+compiles 105-154, so every round evicted the classes of the round
+before and Janino compiled them all again: ~300 compilations per
+two-round crawl pass, every pass.  Measured on the benchmark's two
+crawl workloads, a steady round plus a compaction round generate 219
+distinct classes; the cap of 1000 holds that working set with
+headroom, so a session compiles each round's code once.
 """
 
 from __future__ import annotations
@@ -48,6 +57,9 @@ def get_spark(
         # too lazy for a round-per-seconds engine
         .config("spark.cleaner.periodicGC.interval", "60s")
         .config("spark.ui.enabled", "false")
+        # a crawl pass generates 219 distinct classes, Spark keeps 100
+        # by default (see the module docstring)
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -58,12 +58,11 @@ def _spark_kind(dt: str) -> str:
 
 
 def _dtype_mismatches(spark_dtypes: list[tuple[str, str]], duck_pdf: pd.DataFrame):
-    """Schema-kind parity (the scripts/dtype_parity.py audit, folded
-    into the suite per VERDICT r4 item 5): any int/float/bool KIND
-    drift between the Spark result schema and the DuckDB oracle's
-    pandas dtypes is a latent driver hash failure (the r3 q_rollup
-    class: DuckDB sum(BIGINT) -> HUGEINT -> float64 vs Spark int64 —
-    every oracle aggregate must be CAST (... AS BIGINT))."""
+    """Schema-kind parity, checked for every oracle query: any
+    int/float/bool KIND drift between the Spark result schema and the
+    DuckDB oracle's pandas dtypes is a latent oracle hash failure (the
+    r3 q_rollup class: DuckDB sum(BIGINT) -> HUGEINT -> float64 vs
+    Spark int64 — every oracle aggregate must be CAST (... AS BIGINT))."""
     skinds = {c: _spark_kind(t) for c, t in spark_dtypes}
     bad = []
     for c in duck_pdf.columns:

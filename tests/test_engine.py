@@ -292,6 +292,32 @@ def test_steady_rounds_never_read_tail(spark, fixture_paths, tmp_path, monkeypat
     assert calls["n"] == 0, "steady-state round read the full frontier tail"
 
 
+def test_repeated_crawl_compiles_no_new_code(spark, fixture_paths, tmp_path):
+    """Per-round fixed cost: the whole-stage-codegen classes a crawl's
+    rounds generate stay in Spark's codegen cache, which get_spark sizes
+    above the crawl's working set, so a second identical crawl in the
+    same session compiles nothing.  With Spark's default 100-entry cache
+    each round evicts the previous round's classes and every crawl
+    compiles them all again."""
+    compilations = (
+        spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+
+    def crawl(name):
+        cfg = CrawlConfig(base_budget=BUDGET, max_rounds=3, frontier_compact_every=2)
+        _, engine = _make_engine(spark, fixture_paths, str(tmp_path / name), cfg)
+        before = compilations.getCount()
+        history = engine.run(spark.read.parquet(fixture_paths["seeds"]))
+        for df in (engine.web_pages, engine.web_images, engine.robots):
+            df.unpersist()
+        assert len(history) == 3
+        return compilations.getCount() - before
+
+    assert crawl("first") > 0
+    assert crawl("second") == 0
+
+
 def test_head_resize_refill_equivalence(spark, fixture_paths, tmp_path, full_run):
     """Resuming under a DIFFERENT compaction cadence changes head_k;
     the stored head is then mis-sized for the new config and the engine

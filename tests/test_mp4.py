@@ -354,3 +354,109 @@ def test_avi_roundtrip_and_corrupt():
         AV.video_track(bytes(bad))
     with pytest.raises(NotImplementedError):
         AV.decode_frame(data, t.frames[0])
+
+
+def _empty_fragment_moof(count: int, default_size: int | None) -> bytes:
+    """One moof whose only trun has flags=0: ``count`` rows that carry
+    no field, all taking the tfhd default duration (and size, if any)."""
+    tf_flags = M._TFHD_BASE_IS_MOOF | M._TFHD_DEF_DUR
+    tfhd_fields = struct.pack(">II", 1, 1)
+    if default_size is not None:
+        tf_flags |= M._TFHD_DEF_SIZE
+        tfhd_fields += struct.pack(">I", default_size)
+    tfhd = M._full(b"tfhd", 0, tf_flags, tfhd_fields)
+    trun = M._full(b"trun", 0, 0, struct.pack(">I", count))
+    mfhd = M._full(b"mfhd", 0, 0, struct.pack(">I", 1))
+    return M._box(b"moof", mfhd + M._box(b"traf", tfhd + trun))
+
+
+def test_fragment_sample_budget_spans_the_whole_file(monkeypatch):
+    """_MAX_SAMPLES bounds a track's samples across all its moofs, not
+    each trun alone, and a trun whose rows carry no size field cannot
+    declare more default-size samples than the file holds.  The proof
+    of concept is an 876-byte file of 4 moofs, each a trun of flags=0
+    claiming 2^22-1 zero-size samples: unbounded, it parsed into 16.7M
+    Samples; it must raise at its first trun instead."""
+    init = M.mux_fragmented(_payloads(1), 16, 12)  # trex default size 0
+    init = init[: init.find(b"moof") - 4]
+    count = (1 << 22) - 1
+    poc = init + _empty_fragment_moof(count, None) * 4
+    assert len(poc) == 876
+    with pytest.raises(ValueError, match="trun count"):
+        M.video_track(poc)
+    # a non-zero default size must fit in the file as well
+    with pytest.raises(ValueError, match="does not fit the file"):
+        M.video_track(init + _empty_fragment_moof(count, 1))
+    # the budget is cumulative: 3 fragments of 4 samples each pass a
+    # per-trun bound of 10 but exceed a per-track budget of 10
+    pl = _payloads(12)
+    data = M.mux_fragmented(pl, 16, 12, samples_per_fragment=4)
+    monkeypatch.setattr(M, "_MAX_SAMPLES", 10)
+    with pytest.raises(ValueError, match="sample budget"):
+        M.video_track(data)
+    monkeypatch.setattr(M, "_MAX_SAMPLES", 12)
+    assert len(M.video_track(data).samples) == 12
+
+
+def test_fragment_without_tfdt_continues_after_progressive_samples():
+    """A fragment without tfdt starts where the moov's own samples end:
+    at the last progressive sample's dts plus its duration."""
+    pl = _payloads(3)
+    prog = M.mux(pl, 16, 12, fps=8)  # dts 0, 125, 250
+    extra = [b"\x01" * 9, b"\x02" * 11]
+    tfhd = M._full(
+        b"tfhd", 0, M._TFHD_BASE_IS_MOOF | M._TFHD_DEF_DUR, struct.pack(">II", 1, 125)
+    )
+
+    def moof(data_offset: int) -> bytes:
+        trun = M._full(
+            b"trun",
+            0,
+            M._TRUN_DATA_OFF | M._TRUN_SIZE,
+            struct.pack(">Ii", len(extra), data_offset)
+            + b"".join(struct.pack(">I", len(p)) for p in extra),
+        )
+        mfhd = M._full(b"mfhd", 0, 0, struct.pack(">I", 1))
+        return M._box(b"moof", mfhd + M._box(b"traf", tfhd + trun))
+
+    data = prog + moof(len(moof(0)) + 8) + M._box(b"mdat", b"".join(extra))
+    t = M.video_track(data)
+    assert [s.dts for s in t.samples] == [0, 125, 250, 375, 500]
+    assert [s.idx for s in t.samples] == [0, 1, 2, 3, 4]
+    assert [M.sample_payload(data, s) for s in t.samples] == pl + extra
+
+
+def test_avi_top_down_dib_reports_positive_size():
+    """BITMAPINFOHEADER biWidth/biHeight are signed; a negative
+    biHeight (a top-down DIB) is the frame height, not ~4.29e9."""
+    from crawler_spark import avi as AV
+
+    data = bytearray(AV.mux(_payloads(2), 20, 10))
+    strf = data.find(b"strf") + 8
+    struct.pack_into("<i", data, strf + 8, -10)
+    t = AV.video_track(bytes(data))
+    assert (t.width, t.height) == (20, 10)
+
+
+def test_avi_frames_inside_rec_lists_without_idx1():
+    """movi may group its chunks in LIST 'rec ' interleave groups; a
+    file without idx1 must still enumerate every frame in them, in file
+    order, beside frames outside any group."""
+    from crawler_spark import avi as AV
+
+    frames = _payloads(5, base=3)
+    src = AV.mux(frames, 20, 10)
+    movi_at = src.find(b"movi") - 8
+    hdrl = src[12:movi_at]
+    chunks = [AV._chunk(b"00dc", f) for f in frames]
+    movi = AV._list(
+        b"movi",
+        AV._list(b"rec ", chunks[0] + chunks[1])
+        + chunks[2]
+        + AV._list(b"rec ", chunks[3] + chunks[4]),
+    )
+    body = b"AVI " + hdrl + movi  # no idx1
+    data = b"RIFF" + struct.pack("<I", len(body)) + body
+    t = AV.video_track(data)
+    assert [AV.frame_payload(data, f) for f in t.frames] == frames
+    assert all(f.is_sync for f in t.frames)
